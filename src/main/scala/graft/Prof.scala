@@ -87,9 +87,9 @@ object Prof {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (collecting) {
           val si = e.stageInfo
-          val jid = stageJob.getOrDefault(si.stageId,
-            if (order.isEmpty) -1 else order.get(order.size() - 1))
-          val j = jobs.get(jid)
+          // a stage whose job started before collection began has no
+          // entry: skip it rather than guess an owner
+          val j = jobs.get(stageJob.getOrDefault(si.stageId, -1))
           if (j != null) {
             j.tasks += si.numTasks
             j.taskMs += si.taskMetrics.executorRunTime

@@ -456,6 +456,10 @@ object Dedup {
     * returns the collapsed-corpus answer 2.4x faster at 10x replication).
     * `metricName` must be unique per query when composed more than once —
     * see [[lshPairs]].
+    *
+    * Reads its input twice (the [[dupClusters]] checkpoints, then the
+    * returned cluster join): persist a computed input first. ConfigPipeline's `dedup_near` stage
+    * declares this and materializes its input once.
     */
   def keepCanonical(df: DataFrame, idCol: String, textCol: String,
                     numHashes: Int = 16, bands: Int = 4, rowsPerBand: Int = 4,
@@ -1374,6 +1378,10 @@ object Dedup {
     * the only corpus-sized exchange is the banding's. Same
     * collision-is-duplicate operating point as keepCanonical (tune with
     * [[lshRecallReport]]).
+    *
+    * Reads its input twice (the [[dupClusters]] checkpoints, then the
+    * returned weight join): persist a computed input first. ConfigPipeline's `soft_dedup` stage
+    * declares this and materializes its input once.
     */
   def softDedupWeights(df: DataFrame, idCol: String, textCol: String,
                        numHashes: Int = 16, bands: Int = 4, rowsPerBand: Int = 4,

@@ -467,6 +467,10 @@ object Ops {
     * on the kept corpus. Weights are relative integer parts
     * (e.g. en:50, zh:30, es:20); rates are computed driver-side in BigInt,
     * so no weight/count combination can overflow.
+    *
+    * Reads its input twice (the group-count collect, then the returned plan):
+    * persist a computed input first. ConfigPipeline's `mixture` stage
+    * declares this and materializes its input once.
     */
   def resampleMixture(df: DataFrame, idCol: String, groupCol: String,
                       weights: Map[String, Int]): DataFrame = {
@@ -532,6 +536,10 @@ object Ops {
     * fallback).
     *
     * Output: (id, grp) for the kept documents.
+    *
+    * Reads its input twice (the group-count collect, then the returned plan):
+    * persist a computed input first. ConfigPipeline's `temperature_sample` stage
+    * declares this and materializes its input once.
     */
   def temperatureSample(df: DataFrame, idCol: String, groupCol: String,
                         total: Long, alpha: Double = 0.5): DataFrame = {
@@ -667,6 +675,10 @@ object Ops {
     * in expectation (md5 buckets are token-unbiased); error shrinks as
     * 1/√n_docs. One token-count aggregate (group-sized collect, like
     * [[resampleMixture]]'s), then a pure filter projection.
+    *
+    * Reads its input twice (the token-count collect, then the returned plan):
+    * persist a computed input first. ConfigPipeline's `token_budget` stage
+    * declares this and materializes its input once.
     */
   def tokenBudgetRate(df: DataFrame, idCol: String, groupCol: String,
                       textCol: String, budgets: Map[String, Long]): DataFrame = {
@@ -796,6 +808,10 @@ object Ops {
     * ever enter an exchange.
     *
     * Output: (value, cnt) for values with cnt · 1000 > n · supportPermille.
+    *
+    * Reads its input twice (the freqItems sketch, then the returned plan):
+    * persist a computed input first. ConfigPipeline's `heavy_hitters` stage
+    * declares this and materializes its input once.
     * Null values never qualify (they fold into the rest-group).
     */
   def heavyHitters(df: DataFrame, valueCol: String,
@@ -1179,6 +1195,10 @@ object Ops {
     * same operation order the oracle runs — bit-stable cross-engine.
     *
     * Output: (bin, lo, hi, n) for non-empty bins.
+    *
+    * Reads its input twice (the (min, max) fetch, then the returned plan):
+    * persist a computed input first. ConfigPipeline's `histogram` stage
+    * declares this and materializes its input once.
     */
   def histogram(df: DataFrame, valueCol: String, bins: Int): DataFrame = {
     require(bins > 0, s"bins must be positive, got $bins")
@@ -1270,6 +1290,7 @@ object Ops {
     * which is exactly the case that must abort hardest. The input is
     * therefore read twice (count + emit) — persist upstream or read from
     * stable storage; the reference pays the same bookkeeping per message.
+    * ConfigPipeline's `error_budget` stage materializes its input once.
     * Pair with a PERMISSIVE-mode read (`columnNameOfCorruptRecord`) so
     * malformed source rows arrive as data instead of exceptions:
     * `isError = col("_corrupt_record").isNotNull`.

@@ -550,7 +550,8 @@ object Sinks {
     * GENERATION wide instead of microseconds). Unready carcasses from
     * crashed writes are cleaned at entry; a legacy FLAT (rename-layout)
     * dir migrates: its old content is deleted only after the pointer
-    * lands.
+    * lands, and only once superseded longer than the `keepMinAgeMs`
+    * floor, like a generation.
     *
     * Crash windows (each green in PointerSwapSpec):
     *  - mid-write: an unready `gen-N` carcass, pointer unchanged — next
@@ -585,7 +586,6 @@ object Sinks {
     deleteOrDie(old)
     deleteOrDie(next)
     val cur = readPointer(fs, d)
-    val legacyFlat = fs.exists(d) && !isPointerLayout(fs, d)
     // clean unready carcasses (a crashed write's partial generation is
     // referenced by nothing; the pointed generation is never touched)
     listGens(fs, d).filterNot { case (n, p) =>
@@ -630,20 +630,25 @@ object Sinks {
     def supersededAgeMs(n: Long): Long =
       readyGens.find(_._1 > n).flatMap(g => readyMtime(g._2))
         .map(nowMs - _).getOrElse(0L)
+    val flatAgeMs = supersededAgeMs(-1L) // before retention removes its clock
     readyGens.filter(_._1 != nextN)
       .dropRight(keepGens - 1)
       .filter { case (n, _) => supersededAgeMs(n) >= keepMinAgeMs }
       .foreach { case (_, p) => deleteOrDie(p) }
     // legacy flat content (a rename-protocol life before the protocol
-    // switch) is retired only now — the input frame read those files and
-    // the write job above fully materialized before anything is deleted
-    // (the same ordering contract the rename protocol's .next gives)
-    if (legacyFlat)
-      fs.listStatus(d).foreach { st =>
-        val n = st.getPath.getName
-        if (genNumber(n).isEmpty && n != PointerFile &&
-          n != PointerFile + ".tmp") deleteOrDie(st.getPath)
-      }
+    // switch) is the generation the oldest ready one superseded: it is
+    // retired only after the write job above fully materialized (the
+    // ordering contract the rename protocol's .next gives), and only once
+    // superseded more than the floor ago — a reader that listed the flat
+    // layout keeps its files for the same SLA as a generation's readers.
+    // The count bound does not hold it, so at a zero floor the migrating
+    // swap retires it.
+    val flat = fs.listStatus(d).filter { st =>
+      val n = st.getPath.getName
+      genNumber(n).isEmpty && n != PointerFile && n != PointerFile + ".tmp"
+    }
+    if (flat.nonEmpty && flatAgeMs >= keepMinAgeMs)
+      flat.foreach(st => deleteOrDie(st.getPath))
   }
 
   /** [[recoverSwap]]'s pointer-protocol arm: promote the newest READY
@@ -759,7 +764,9 @@ object Sinks {
     * unevenly under it; pre-transform (log, bucket id) if that matters.
     *
     * Returns `df` plus `zval`. Columns must be integral-castable;
-    * `d * bits` must stay ≤ 63.
+    * `d * bits` must stay ≤ 63. Reads `df` twice (the bounds fetch, then
+    * the returned projection): persist a computed input first.
+    * ConfigPipeline's `zorder` stage materializes it once.
     */
   def zorderValue(df: DataFrame, cols: Seq[String], bits: Int = 8): DataFrame = {
     require(cols.nonEmpty && cols.size * bits <= 63,

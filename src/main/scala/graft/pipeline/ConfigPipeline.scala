@@ -15,7 +15,15 @@ import graft.Caching.TrackedSyntax
   * The config is JSON (parsed with the Jackson shipped inside Spark — no
   * extra dependency); each stage is `{"name", "op", ...}` and compiles onto
   * the [[Pipeline]] builder, so config pipelines get identical planning —
-  * including fan-out persistence — to programmatic ones. Expressions are
+  * including fan-out persistence — to programmatic ones. An op that reads
+  * its input twice (a driver action or eager checkpoint over it, then a
+  * returned plan that reads it again) declares its stage `twoPass`, so the
+  * input is materialized once instead of derived twice: `mixture`,
+  * `temperature_sample`, `token_budget` method "rate", `heavy_hitters`,
+  * `histogram`, `error_budget`, `json_schema` mode "enforce", `dedup_near`,
+  * `soft_dedup`, `pca_rotate`, `zorder`, `cluster_sample`, `kcenter`, the
+  * corpus side of `ann` methods "ivf"/"ivfpq"/"sq", and both sides of
+  * `margin_mine` method "ivf". Expressions are
   * Spark SQL strings (`expr(...)`), the declarative analogue of the
   * reference's config-referenced Python callables.
   *
@@ -294,7 +302,7 @@ object ConfigPipeline {
         val pred = if (s.has("expr")) expr(knob("expr").asText())
                    else col("_corrupt_record").isNotNull
         val dropCorrupt = !s.has("expr")
-        p.stage(name, from) { d =>
+        p.stage(name, from, twoPass = true) { d =>
           val gated = graft.operators.Ops.errorBudget(d, pred,
             knob("maxErrors").asLong())
           if (dropCorrupt && gated.columns.contains("_corrupt_record"))
@@ -310,7 +318,7 @@ object ConfigPipeline {
         val schemaText = knob("schema").toString // the schema node verbatim
         val jcol = knob("json").asText()
         val mode = if (s.has("mode")) knob("mode").asText() else "annotate"
-        p.stage(name, from) { d =>
+        p.stage(name, from, twoPass = (mode == "enforce")) { d =>
           mode match {
             case "annotate" =>
               graft.schema.JsonSchemaGate.validate(d, jcol, schemaText)
@@ -389,7 +397,7 @@ object ConfigPipeline {
         val maxBucket = if (s.has("maxBucket")) knob("maxBucket").asInt() else 1 << 12
         // metric name derives from the stage name so two dedup_near stages
         // can feed one output (observed-metric names must be unique per query)
-        p.stage(name, from)(graft.dedup.Dedup.keepCanonical(_, id, text,
+        p.stage(name, from, twoPass = true)(graft.dedup.Dedup.keepCanonical(_, id, text,
           numHashes, bands, rpb, maxBucket,
           metricName = s"${name}_lsh_bucket_guard"))
       case "dedup_best" =>
@@ -435,7 +443,7 @@ object ConfigPipeline {
       // fit-and-rotate: ONE parametric OPQ rotation from this stage's own
       // second moments, applied in place (vec column replaced)
       case "pca_rotate" =>
-        p.stage(name, from) { d =>
+        p.stage(name, from, twoPass = true) { d =>
           graft.similarity.Pca.rotateAll(d, knob("vec").asText(),
             graft.similarity.Pca.rotation(d, knob("vec").asText(),
               knob("dim").asInt(),
@@ -630,7 +638,7 @@ object ConfigPipeline {
         // NOTE: the min/max bounds job runs when the stage BUILDS (the bins
         // are literals in the projection) — the `ann` ivfpq precedent, where
         // codebooks also train at build; keep configs purpose-scoped
-        p.stage(name, from)(graft.operators.Sinks.zorderValue(_,
+        p.stage(name, from, twoPass = true)(graft.operators.Sinks.zorderValue(_,
           strs(knob("cols")),
           if (s.has("bits")) knob("bits").asInt() else 8))
       case "corpus_shuffle" => // seeded global shuffle (adds shard, pos)
@@ -693,7 +701,7 @@ object ConfigPipeline {
           knob("id").asText(), knob("text").asText(), knob("window").asInt(),
           knob("minDocFreq").asInt()))
       case "histogram" =>
-        p.stage(name, from)(graft.operators.Ops.histogram(_,
+        p.stage(name, from, twoPass = true)(graft.operators.Ops.histogram(_,
           knob("value").asText(), knob("bins").asInt()))
       // per-group quantiles; mode "approx" (the default here — the config
       // path is what a 100 TB user runs) bounds agg state by `accuracy`
@@ -844,7 +852,7 @@ object ConfigPipeline {
       // exact heavy hitters at sketch cost: freqItems candidates + one
       // verify pass; support is strictly-greater permille of the row count
       case "heavy_hitters" =>
-        p.stage(name, from)(graft.operators.Ops.heavyHitters(_,
+        p.stage(name, from, twoPass = true)(graft.operators.Ops.heavyHitters(_,
           knob("value").asText(), knob("supportPermille").asInt()))
       // token-distribution drift vs a prior stage's snapshot (empirical
       // KL(new||old) under add-one-smoothed unigram LMs, shared vocab)
@@ -855,13 +863,13 @@ object ConfigPipeline {
       case "mixture" =>
         val w = knob("weights").fields().asScala
           .map(e => e.getKey -> e.getValue.asInt()).toMap
-        p.stage(name, from)(graft.operators.Ops.resampleMixture(_,
+        p.stage(name, from, twoPass = true)(graft.operators.Ops.resampleMixture(_,
           knob("id").asText(), knob("group").asText(), w))
       // temperature (α) sampling: quotas ∝ n_group^alpha, derived from the
       // data instead of explicit weights — the multilingual mixing rule
       case "temperature_sample" =>
         val alpha = if (s.has("alpha")) knob("alpha").asDouble() else 0.5
-        p.stage(name, from)(graft.operators.Ops.temperatureSample(_,
+        p.stage(name, from, twoPass = true)(graft.operators.Ops.temperatureSample(_,
           knob("id").asText(), knob("group").asText(),
           knob("total").asLong(), alpha))
       // token-budget selection: absolute per-group token targets. method
@@ -878,7 +886,7 @@ object ConfigPipeline {
             p.stage(name, from)(graft.operators.Ops.tokenBudgetSample(_,
               id, group, text, b))
           case "rate" =>
-            p.stage(name, from)(graft.operators.Ops.tokenBudgetRate(_,
+            p.stage(name, from, twoPass = true)(graft.operators.Ops.tokenBudgetRate(_,
               id, group, text, b))
           case other => sys.error(s"token_budget: unknown method '$other'")
         }
@@ -930,7 +938,7 @@ object ConfigPipeline {
               graft.similarity.Mine.marginMine(dfs(0), dfs(1), id, vec, k, tau,
                 mutual))
           case "ivf" =>
-            p.fanIn(name, Seq(ss, ts))(dfs =>
+            p.fanIn(name, Seq(ss, ts), twoPass = Set(ss, ts))(dfs =>
               graft.similarity.Mine.marginMineIvf(dfs(0), dfs(1), id, vec, k,
                 tau, nlist = knob("nlist").asInt(),
                 nprobe = knob("nprobe").asInt(), mutual = mutual))
@@ -940,7 +948,7 @@ object ConfigPipeline {
       // G50 soft dedup from config: near-dup clusters → inverse-count
       // sampling weights (downweight, don't drop)
       case "soft_dedup" =>
-        p.stage(name, from)(graft.dedup.Dedup.softDedupWeights(_,
+        p.stage(name, from, twoPass = true)(graft.dedup.Dedup.softDedupWeights(_,
           knob("id").asText(), knob("text").asText(),
           numHashes = if (s.has("numHashes")) knob("numHashes").asInt() else 16,
           bands = if (s.has("bands")) knob("bands").asInt() else 4,
@@ -975,12 +983,12 @@ object ConfigPipeline {
             sketchK = if (s.has("k")) knob("k").asInt() else 1024))
       // G46 k-center greedy diversity selection from config
       case "kcenter" =>
-        p.stage(name, from)(graft.similarity.Clustering.kCenterGreedy(_,
+        p.stage(name, from, twoPass = true)(graft.similarity.Clustering.kCenterGreedy(_,
           knob("id").asText(), knob("vec").asText(), knob("k").asInt()))
       // cluster-balanced diversity sample (r13, q_cluster_sample's shape):
       // k-means assignment → per-cluster md5-order quota of n ids
       case "cluster_sample" =>
-        p.stage(name, from) { d =>
+        p.stage(name, from, twoPass = true) { d =>
           val asg = graft.similarity.Clustering.kmeans(d,
               knob("id").asText(), knob("vec").asText(),
               k = knob("k").asInt(),
@@ -1026,7 +1034,7 @@ object ConfigPipeline {
             p.fanIn(name, Seq(qs, cs))(dfs =>
               graft.similarity.Ann.bruteForceTopK(dfs(0), dfs(1), id, vec, k))
           case "ivf" =>
-            p.fanIn(name, Seq(qs, cs))(dfs =>
+            p.fanIn(name, Seq(qs, cs), twoPass = Set(cs))(dfs =>
               graft.similarity.Ann.ivfTopK(dfs(0), dfs(1), id, vec, k,
                 nlist = intKnob("nlist", 64), nprobe = intKnob("nprobe", 8),
                 trained = trainedKnob))
@@ -1046,7 +1054,7 @@ object ConfigPipeline {
             require(rerank || !s.has("mShort"),
               s"ann '$name': mShort is the rerank shortlist — set " +
                 "\"rerank\": true or drop mShort")
-            p.fanIn(name, Seq(qs, cs)) { dfs =>
+            p.fanIn(name, Seq(qs, cs), twoPass = Set(cs)) { dfs =>
               val cbs = graft.similarity.Pq.trainCodebooks(dfs(1), id, vec,
                 dim = dim, m = intKnob("m", 4), k = intKnob("codebookK", 16),
                 rounds = intKnob("rounds", 2))
@@ -1063,7 +1071,7 @@ object ConfigPipeline {
           // nlist/nprobe switch to the IVF-routed composition
           case "sq" =>
             val dim = knob("dim").asInt()
-            p.fanIn(name, Seq(qs, cs)) { dfs =>
+            p.fanIn(name, Seq(qs, cs), twoPass = Set(cs)) { dfs =>
               val scales = graft.similarity.Sq.trainScales(dfs(1), vec, dim)
               if (s.has("nlist"))
                 graft.similarity.Sq.ivfSqTopK(dfs(0), dfs(1), id, vec, scales, k,

@@ -13,7 +13,10 @@ import graft.Caching.TrackedSyntax
   * recomputing a shared upstream once per consumer — is handled by
   * persisting any stage with more than one consumer (the cluster analogue
   * of the reference's queue fan-out, which also materializes each message
-  * once per downstream).
+  * once per downstream). A stage whose function reads an input twice — a
+  * driver action or eager checkpoint over it, then a returned plan that
+  * reads it again — declares `twoPass` and counts as two consumers of that
+  * input, so the same rule materializes it once.
   */
 final class Pipeline private (stages: Vector[(String, Pipeline.Stage)]) {
   import Pipeline._
@@ -26,21 +29,31 @@ final class Pipeline private (stages: Vector[(String, Pipeline.Stage)]) {
   /** A source node: any DataFrame (file scan, generator, stream). */
   def source(name: String, df: DataFrame): Pipeline = add(name, Source(df))
 
-  /** `from > name`: a 1-in transform stage. */
-  def stage(name: String, from: String)(f: DataFrame => DataFrame): Pipeline = {
+  /** `from > name`: a 1-in transform stage. `twoPass`: `f` reads its
+    * input twice, so `from` is materialized once (see the class doc).
+    */
+  def stage(name: String, from: String, twoPass: Boolean = false)
+           (f: DataFrame => DataFrame): Pipeline = {
     require(stages.exists(_._1 == from), s"unknown upstream '$from'")
-    add(name, Transform(from, f))
+    add(name, FanIn(Seq(from), if (twoPass) Set(from) else Set.empty, dfs => f(dfs.head)))
   }
 
-  /** `(from...) > name`: fan-in; default combiner is unionByName. */
-  def fanIn(name: String, from: Seq[String])
+  /** `(from...) > name`: fan-in; default combiner is unionByName.
+    * `twoPass` names the inputs `f` reads twice.
+    */
+  def fanIn(name: String, from: Seq[String], twoPass: Set[String] = Set.empty)
            (f: Seq[DataFrame] => DataFrame = _.reduce(_ unionByName _)): Pipeline = {
     from.foreach(u => require(stages.exists(_._1 == u), s"unknown upstream '$u'"))
-    add(name, FanIn(from, f))
+    require(twoPass.subsetOf(from.toSet), s"twoPass inputs ${twoPass -- from} not in from")
+    add(name, FanIn(from, twoPass, f))
   }
 
-  /** Resolve the DAG to DataFrames. Stages consumed by 2+ downstreams are
-    * persisted so fan-out does not recompute the shared prefix.
+  /** Resolve the DAG to DataFrames. Stages consumed by 2+ downstreams — a
+    * `twoPass` read counting twice — are persisted so neither fan-out nor a
+    * two-pass operator recomputes the shared prefix. A stage that is
+    * already cached (e.g. `csv_permissive`'s tracked parse, or a caller's
+    * own persist) is left as it is: not persisted again, and not released
+    * by [[graft.Caching.drain]] on the pipeline's behalf.
     *
     * Memoized per Pipeline instance: stage functions may carry real side
     * effects (the config `*_index_write` ops run an index build when their
@@ -55,19 +68,17 @@ final class Pipeline private (stages: Vector[(String, Pipeline.Stage)]) {
   private lazy val resolved0: Map[String, DataFrame] = {
     val consumers = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
     stages.foreach {
-      case (_, Transform(from, _)) => consumers(from) += 1
-      case (_, FanIn(from, _))     => from.foreach(consumers(_) += 1)
-      case _                       =>
+      case (_, FanIn(from, twoPass, _)) => (from ++ twoPass).foreach(consumers(_) += 1)
+      case _                            =>
     }
     val resolved = scala.collection.mutable.LinkedHashMap.empty[String, DataFrame]
     stages.foreach { case (name, s) =>
       val df = s match {
-        case Source(d)          => d
-        case Transform(from, f) => f(resolved(from))
-        case FanIn(from, f)     => f(from.map(resolved))
+        case Source(d)         => d
+        case FanIn(from, _, f) => f(from.map(resolved))
       }
-      resolved(name) = if (consumers(name) > 1 && !df.isStreaming)
-        df.trackedPersist() else df
+      resolved(name) = if (consumers(name) > 1 && !df.isStreaming &&
+          df.storageLevel == StorageLevel.NONE) df.trackedPersist() else df
     }
     resolved.toMap
   }
@@ -79,8 +90,9 @@ final class Pipeline private (stages: Vector[(String, Pipeline.Stage)]) {
 object Pipeline {
   sealed private trait Stage
   private final case class Source(df: DataFrame) extends Stage
-  private final case class Transform(from: String, f: DataFrame => DataFrame) extends Stage
-  private final case class FanIn(from: Seq[String], f: Seq[DataFrame] => DataFrame) extends Stage
+  /** Every non-source stage; a 1-in transform is a one-input fan-in. */
+  private final case class FanIn(from: Seq[String], twoPass: Set[String],
+                                 f: Seq[DataFrame] => DataFrame) extends Stage
 
   def empty: Pipeline = new Pipeline(Vector.empty)
   def apply(): Pipeline = empty

@@ -324,6 +324,9 @@ object Ann {
     *
     * With `nprobe == nlist` this is exhaustive and matches [[bruteForceTopK]].
     * Output shape matches [[bruteForceTopK]]; recall < 1 when nprobe < nlist.
+    * Reads `corpus` twice (the centroid collect, then the returned plan):
+    * persist a computed corpus first. ConfigPipeline's `ann` stage
+    * materializes it once.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
               idCol: String, vecCol: String, k: Int,

@@ -145,7 +145,9 @@ object Clustering {
 
   /** K-means assignment after `rounds` Lloyd passes.
     * Output: (id, cluster, dist2) — dist2 in quantized units (divide by
-    * scale² for the unquantized value).
+    * scale² for the unquantized value). Reads `df` once per Lloyd round
+    * and again in the returned plan: persist a computed input first.
+    * ConfigPipeline's `cluster_sample` stage materializes it once.
     */
   def kmeans(df: DataFrame, idCol: String, vecCol: String,
              k: Int, rounds: Int = 2, scale: Double = 1048576.0): DataFrame = {
@@ -186,7 +188,9 @@ object Clustering {
     * row and non-increasing afterwards. Selection STOPS EARLY (fewer than
     * `k` rows) once the farthest remaining row is at distance 0 — every row
     * is then a center (or an exact duplicate of one), and further rounds
-    * would only re-emit already-picked ids with radius 0.
+    * would only re-emit already-picked ids with radius 0. Each round
+    * re-reads `df`: persist a computed input first. ConfigPipeline's
+    * `kcenter` stage materializes it once.
     */
   def kCenterGreedy(df: DataFrame, idCol: String, vecCol: String, k: Int,
                     scale: Double = 1048576.0): DataFrame = {

@@ -116,6 +116,9 @@ object Mine {
     * margin pipeline. With `nprobe == nlist` the routing is exhaustive and
     * the result is exactly [[marginMine]]'s (shared oracle); at
     * `nprobe < nlist` recall trades against a ~nprobe/nlist scan fraction.
+    * Reads both inputs twice (each side's centroid collect, then the
+    * returned plan): persist computed inputs first. ConfigPipeline's
+    * `margin_mine` stage materializes them once.
     */
   def marginMineIvf(src: DataFrame, tgt: DataFrame, idCol: String, vecCol: String,
                     k: Int, tau: Double, nlist: Int, nprobe: Int,

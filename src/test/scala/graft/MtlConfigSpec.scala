@@ -188,6 +188,46 @@ class MtlConfigSpec extends SparkSpec {
     assert(mix.count() > 0)
   }
 
+  test("ConfigPipeline mixture over langid ⋈ docs filters on the cached " +
+       "lang_pred and keeps the programmatic survivors") {
+    spark.catalog.clearCache() // other suites' leftovers are not ours
+    val docs = s"$sfDir/documents.parquet"
+    val weights = Map("en" -> 40, "de" -> 20, "es" -> 20, "fr" -> 20)
+    val mix = ConfigPipeline.fromJson(spark,
+      s"""{"stages": [
+         | {"name": "d", "op": "parquet", "path": "$docs"},
+         | {"name": "lid", "op": "langid", "from": "d", "id": "doc_id", "text": "text"},
+         | {"name": "lid2", "op": "select", "from": "lid",
+         |  "exprs": ["doc_id AS lid_id", "lang_pred"]},
+         | {"name": "lj", "op": "join", "from": ["d", "lid2"], "on": "doc_id = lid_id"},
+         | {"name": "tagged", "op": "select", "from": "lj",
+         |  "exprs": ["doc_id", "text", "lang_pred"]},
+         | {"name": "mix", "op": "mixture", "from": "tagged", "id": "doc_id",
+         |  "group": "lang_pred", "weights": {"en": 40, "de": 20, "es": 20, "fr": 20}}
+         |]}""".stripMargin).output("mix")
+    val got = mix.collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def filters(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      Plans.collect(df.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FilterExec => f.condition.sql
+      }
+    val langFilters = filters(mix)
+    assert(langFilters.exists(_.contains("lang_pred")), langFilters.mkString("\n"))
+    assert(!langFilters.exists(_.contains("count_in_set")),
+      "the mixture filter re-derives langid:\n" + langFilters.mkString("\n"))
+    // the same ops without the pipeline: the survivors must not change
+    val d = spark.read.parquet(docs)
+    val tagged = d.join(d.select(col("doc_id").as("lid_id"),
+        graft.functions.Text.langId(col("text")).as("lang_pred")),
+        col("doc_id") === col("lid_id"))
+      .select("doc_id", "text", "lang_pred")
+    val want = Ops.resampleMixture(tagged, "doc_id", "lang_pred", weights)
+    val wantIds = want.select("doc_id").as[Long].collect().sorted.toSeq
+    assert(got.nonEmpty && got == wantIds)
+    Caching.drain()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("ConfigPipeline.render substitutes ${ENV} placeholders and fails on unbound") {
     val got = ConfigPipeline.render(
       "path ${A}/x and ${B}", Map("A" -> "/data", "B" -> "7"))

@@ -75,6 +75,46 @@ class PipelineMultimodalSpec extends SparkSpec {
     }
   }
 
+  test("a twoPass stage derives its computed input once; drain releases it") {
+    spark.catalog.clearCache() // other suites' leftovers are not ours
+    // counts the rows the tagging projection evaluates: once per derivation
+    val evals = spark.sparkContext.longAccumulator("twoPass-evals")
+    val tag = udf { (n: Long) => evals.add(1); Seq("a", "b", "c")((n % 3).toInt) }
+    def survivors(twoPass: Boolean): Set[Long] = {
+      evals.reset()
+      val p = Pipeline.empty
+        .source("raw", spark.range(300).toDF("n"))
+        .stage("tagged", "raw")(_.withColumn("g", tag(col("n"))))
+        .stage("mix", "tagged", twoPass)(Ops.resampleMixture(_, "n", "g",
+          Map("a" -> 2, "b" -> 1, "c" -> 1)))
+      p.output("mix").select("n").as[Long].collect().toSet
+    }
+    val plain = survivors(twoPass = false)
+    assert(evals.value >= 600L, "control: the count job and the filter each derive it")
+    val declared = survivors(twoPass = true)
+    assert(evals.value == 300L, s"input derived ${evals.value / 300.0} times")
+    assert(declared == plain && declared.nonEmpty)
+    assert(!spark.sharedState.cacheManager.isEmpty)
+    Caching.drain()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the materialized input outlived Caching.drain()")
+  }
+
+  test("a twoPass stage over an already persisted input leaves that cache " +
+       "to its owner") {
+    spark.catalog.clearCache() // other suites' leftovers are not ours
+    val own = spark.range(100).toDF("v").persist()
+    val hist = Pipeline.empty.source("own", own)
+      .stage("hist", "own", twoPass = true)(Ops.histogram(_, "v", 4))
+      .output("hist")
+    assert(hist.select(sum("n")).as[Long].head() == 100L)
+    Caching.drain()
+    assert(own.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "the pipeline persisted and drained a frame the caller had cached")
+    own.unpersist(blocking = true)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("recorder sink appends across runs; blackHole counts everything") {
     val dir = java.nio.file.Files.createTempDirectory("graft-rec").toString + "/log"
     graft.operators.Sinks.recorder(spark.range(3).toDF("n"), dir)

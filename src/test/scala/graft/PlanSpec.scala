@@ -70,6 +70,8 @@ class PlanSpec extends SparkSpec {
     val errs = headline.sorted.flatMap { name =>
       val plan = SparkEntry.queries(name)(spark, sfDir).queryExecution
         .explainString(org.apache.spark.sql.execution.FormattedMode)
+      // as PlanBudgets does: no cached subplan leaks into the next query
+      graft.Caching.drain()
       val got = PlanBudgets.countExchanges(plan).toString
       if (got == budgets(name)) None
       else Some(s"$name: expected ${budgets(name)} exchanges, plan has $got")

@@ -177,6 +177,38 @@ class PointerSwapSpec extends SparkSpec {
     }
   }
 
+  test("with a positive keepMinAgeMs, a reader that listed the FLAT layout " +
+       "still reads every file after the first pointer swap") {
+    withPointer {
+      val key = "spark.graft.swap.keepMinAgeMs"
+      val prev = spark.conf.getOption(key)
+      spark.conf.set(key, "3600000") // 1h floor
+      try {
+        val base = java.nio.file.Files.createTempDirectory("ptr_flat").toString
+        val idx = s"$base/idx"
+        Seq((1L, "a", 0), (2L, "b", 1)).toDF("id", "v", "cell")
+          .write.partitionBy("cell").parquet(idx)
+        // the probe resolved the flat layout and listed its files
+        val probe = graft.streaming.Streams.readIndex(spark, idx,
+          recursive = false)
+        assert(probe.count() == 2)
+        Sinks.swapWrite(Seq((3L, "c", 0)).toDF("id", "v", "cell"), idx,
+          Seq("cell"))
+        assert(probe.select(col("id")).as[Long].collect().toSet == Set(1L, 2L),
+          "the flat files a probe listed were deleted inside the floor")
+        assert(rowsOf(idx) == Set((3L, "c")))
+        // past the floor, the next swap retires the flat residue
+        spark.conf.set(key, "0")
+        Sinks.swapWrite(Seq((4L, "d", 1)).toDF("id", "v", "cell"), idx,
+          Seq("cell"))
+        val names = fs(idx).listStatus(new Path(idx)).map(_.getPath.getName).toSet
+        assert(names.subsetOf(Set("gen-0", "gen-1", Sinks.PointerFile,
+          Sinks.PointerFile + ".tmp")), s"legacy residue: ${names.mkString(",")}")
+        assert(rowsOf(idx) == Set((4L, "d")))
+      } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
   test("crash windows: unready carcass cleaned; ready-but-unpointed " +
        "promoted by recoverSwap; mid-pointer-update falls back to the " +
        "newest ready generation") {
