@@ -77,21 +77,8 @@ object Bench {
     quietBoot()
     log4jConsoleToStderr()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .withExtensions(new org.apache.spark.sql.graftglue.GraftExtensions)
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
-
-    // warmup: a scan, a shuffle, and a broadcast join
-    val r = spark.read.parquet(s"$sfDir/region.parquet")
-    val n = spark.read.parquet(s"$sfDir/nation.parquet")
-    n.join(org.apache.spark.sql.functions.broadcast(r),
-      n("n_regionkey") === r("r_regionkey")).groupBy("r_name").count().collect()
+    val spark = session()
+    warmUp(spark, sfDir)
 
     // ANCHOR: a fixed-shape measurement (scan+shuffle+agg over lineitem,
     // min of 3) taken right after warmup and reported in the JSON line.
@@ -109,46 +96,9 @@ object Bench {
       (System.nanoTime() - t0) / 1e9
     }.min
 
-    // r15 (generalized multi-row-group basis — r14's gate-only rebase
-    // widened per the verdict): EVERY fixture table ships as ONE parquet
-    // row group, so every zero-exchange per-row query over a corpus
-    // table benched on ONE core of 32 (q_bpe_segment's 4.7 s is a
-    // one-core number). A 100 TB table is never one row group — the
-    // engine's scale shape is file-parallel — so the bench runs ALL
-    // queries against a split copy of the sf dir: corpus-sized tables
-    // repartitioned to one file per core, mid-sized to 8, small dims
-    // kept single-file (splitting a 25-row table measures nothing).
-    // The ANCHOR keeps reading the ORIGINAL dir — its shape must stay
-    // fixed across rounds for drift normalization. Verify/oracle inputs
-    // are untouched; the change of basis is recorded in
-    // plans/BENCHNOTES.md r15 (cross-round diffs start from this
-    // round's committed BENCH_FULL.json).
-    val splitDir: String = try {
-      val d = java.nio.file.Files.createTempDirectory("graft_bench_split")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try {
-          import java.nio.file.{Files, Path}
-          Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
-            .forEach(f => Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }))
-      for (t <- graft.sources.Tables.names) {
-        val df = spark.read.parquet(s"$sfDir/$t.parquet")
-        val rows = df.count()
-        val parts = if (rows >= 20000) cpus.toInt
-                    else if (rows >= 2000) 8 else 1
-        (if (parts == 1) df else df.repartition(parts))
-          .write.mode("overwrite").parquet(s"$d/$t.parquet")
-      }
-      d.toString
-    } catch { case e: Throwable =>
-      System.err.println(
-        s"[bench] fixture split failed (${e.getMessage}); using $sfDir")
-      sfDir
-    }
+    val splitDir = splitFixture(spark, sfDir, cpus)
 
-    // optional comma-separated allowlist for local iteration; the driver
-    // leaves it unset → full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    val only = onlyQueries
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
@@ -212,25 +162,11 @@ object Bench {
         f""","anchor_note":"anchor drifted ${drift}%.2fx vs reference $REF_ANCHOR%.3fs - machine load differs; normalize per-query comparisons by anchor ratio before calling regressions""""
       else ""
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","measured":"materialize_all_columns_r8","queries":$qs,"anchor_sec":$anchor,"anchor_ref":$REF_ANCHOR$note,"failed":$failed,"sf":"$sfDir"}"""
-    // a FILTERED run (SPARK_GRAFT_ONLY local iteration) must never
-    // clobber the committed full-suite map — round N+1 diffs round N
-    // through this file, and a 5-query overwrite silently destroys the
-    // history the artifact exists for (it happened twice in r13 before
-    // this guard)
-    // ...and the guard must hold even when SPARK_GRAFT_BENCH_FULL is set
-    // explicitly: a subset run pointed at the committed artifact (or any
-    // path under plans/) is redirected to the subset file, same clobber
-    val fullPath = sys.env.get("SPARK_GRAFT_BENCH_FULL") match {
-      case Some(p) if only.nonEmpty &&
-          (p.contains("plans/") || p.endsWith("BENCH_FULL.json")) =>
-        System.err.println(
-          s"[bench] filtered run (SPARK_GRAFT_ONLY set) may not overwrite " +
-          s"committed artifact $p; writing /tmp/BENCH_SUBSET.json instead")
-        "/tmp/BENCH_SUBSET.json"
-      case Some(p) => p
-      case None => if (only.isEmpty) "plans/BENCH_FULL.json"
-        else "/tmp/BENCH_SUBSET.json"
-    }
+    val requested = sys.env.get("SPARK_GRAFT_BENCH_FULL")
+    val fullPath = fullArtifactPath(requested, filtered = only.nonEmpty)
+    requested.filter(_ != fullPath).foreach(p => System.err.println(
+      s"[bench] filtered run (SPARK_GRAFT_ONLY set) may not overwrite " +
+      s"committed artifact $p; writing $fullPath instead"))
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath),
       fullLine + "\n")
     catch { case e: Throwable =>
@@ -250,4 +186,92 @@ object Bench {
     realOut.flush()
     spark.stop()
   }
+
+  /** SPARK_GRAFT_CPUS (default 4): the harness session's core count. */
+  private[graft] def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** SPARK_GRAFT_ONLY: optional comma-separated query allowlist for local
+    * iteration; unset → full suite.
+    */
+  private[graft] def onlyQueries: Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+
+  /** The session Bench, Prof and Verify share: [[GraftSession.local]] at
+    * [[cpus]] cores, or its confs under an explicit `master`.
+    */
+  private[graft] def session(master: Option[String] = None): SparkSession = {
+    val spark = GraftSession.onMaster(master.getOrElse(s"local[$cpus]"), cpus)
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Warm-up: a scan, a shuffle, and a broadcast join. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    val r = spark.read.parquet(s"$sfDir/region.parquet")
+    val n = spark.read.parquet(s"$sfDir/nation.parquet")
+    n.join(org.apache.spark.sql.functions.broadcast(r),
+      n("n_regionkey") === r("r_regionkey")).groupBy("r_name").count().collect()
+  }
+
+  /** The split copy of `sfDir` the bench's queries read (returns its path;
+    * deleted at JVM exit).
+    *
+    * r15 (generalized multi-row-group basis — r14's gate-only rebase
+    * widened per the verdict): EVERY fixture table ships as ONE parquet
+    * row group, so every zero-exchange per-row query over a corpus
+    * table benched on ONE core of 32 (q_bpe_segment's 4.7 s is a
+    * one-core number). A 100 TB table is never one row group — the
+    * engine's scale shape is file-parallel — so the bench runs ALL
+    * queries against a split copy of the sf dir: corpus-sized tables
+    * (≥ 20000 rows) repartitioned to one file per core, mid-sized
+    * (≥ 2000) to 8, small dims kept single-file (splitting a 25-row table
+    * measures nothing). The ANCHOR keeps reading the ORIGINAL dir — its
+    * shape must stay fixed across rounds for drift normalization.
+    * Verify/oracle inputs are untouched; the change of basis is recorded
+    * in plans/BENCHNOTES.md r15. A failed split falls back to `sfDir`.
+    */
+  private[graft] def splitFixture(spark: SparkSession, sfDir: String,
+                                  cpus: Int): String =
+    try {
+      val d = java.nio.file.Files.createTempDirectory("graft_bench_split")
+      Runtime.getRuntime.addShutdownHook(new Thread(() =>
+        try {
+          import java.nio.file.{Files, Path}
+          Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
+            .forEach(f => Files.deleteIfExists(f))
+        } catch { case _: Throwable => () }))
+      for (t <- graft.sources.Tables.names) {
+        val df = spark.read.parquet(s"$sfDir/$t.parquet")
+        val rows = df.count()
+        val parts = if (rows >= 20000) cpus
+                    else if (rows >= 2000) 8 else 1
+        (if (parts == 1) df else df.repartition(parts))
+          .write.mode("overwrite").parquet(s"$d/$t.parquet")
+      }
+      d.toString
+    } catch { case e: Throwable =>
+      System.err.println(
+        s"[bench] fixture split failed (${e.getMessage}); using $sfDir")
+      sfDir
+    }
+
+  /** Where the full per-query map goes. A FILTERED run (SPARK_GRAFT_ONLY
+    * local iteration) must never clobber the committed full-suite map —
+    * round N+1 diffs round N through this file, and a 5-query overwrite
+    * silently destroys the history the artifact exists for (it happened
+    * twice in r13 before this guard). The guard holds even when
+    * SPARK_GRAFT_BENCH_FULL (`requested`) is set explicitly: a filtered
+    * run pointed at the committed artifact (or any path under plans/) is
+    * redirected to /tmp/BENCH_SUBSET.json.
+    */
+  private[graft] def fullArtifactPath(requested: Option[String],
+                                      filtered: Boolean): String =
+    requested match {
+      case Some(p) if filtered &&
+          (p.contains("plans/") || p.endsWith("BENCH_FULL.json")) =>
+        "/tmp/BENCH_SUBSET.json"
+      case Some(p) => p
+      case None => if (filtered) "/tmp/BENCH_SUBSET.json"
+        else "plans/BENCH_FULL.json"
+    }
 }

@@ -30,23 +30,15 @@ object FusionAudit {
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
     val spark = GraftSession.local(8)
     spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder("query\tunfused\ttotal\tunfused_ops\n")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
-        try {
-          // counting (final tree only, shared spelling) lives in
-          // FusionBudgets — the r16 committed-budget gate this audit
-          // seeded; this main stays the ad-hoc triage CLI
-          val (unfused, total, ops) =
-            FusionBudgets.auditExecuted(fn(spark, sfDir))
-          sb.append(s"$name\t$unfused\t$total\t$ops\n")
-        } catch {
-          case e: Throwable =>
-            sb.append(s"$name\tERR\tERR\t${e.getClass.getSimpleName}\n")
-        } finally Caching.drain()
-      }
-    Files.writeString(Paths.get(out), sb.toString)
+    // the sweep (final tree only, shared spelling) lives in FusionBudgets
+    // — the r16 committed-budget gate this audit seeded; this main stays
+    // the ad-hoc triage CLI, in an extension-carrying session, over any
+    // query subset
+    val rows = FusionBudgets.auditRows(spark, sfDir,
+      SparkEntry.queries.toSeq.sortBy(_._1)
+        .filter { case (n, _) => only.forall(_.contains(n)) })
+    Files.writeString(Paths.get(out),
+      "query\tunfused\ttotal\tunfused_ops\n" + rows)
     println(s"[fusionaudit] wrote $out")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Writes the audited WHOLE-STAGE-CODEGEN fusion state of EVERY
   * SparkEntry query to `src/test/resources/fusion_budgets.tsv` — the
@@ -23,9 +23,9 @@ import org.apache.spark.sql.SparkSession
   * EXECUTED plan (AQE finalizes stages during execution), so both this
   * generator and the spec run every query to completion (the Bench
   * materialization shape, `toRdd.count`) — the slow lane of the plan
-  * gates, ~3 minutes at sf0.001. The session MIRRORS TestSession
-  * (local[4], shuffle partitions 4, sf0.001) so the spec reproduces
-  * these numbers exactly. Regenerate after any INTENDED plan change:
+  * gates, ~3 minutes at sf0.001. The session is [[GraftSession.budget]],
+  * the one TestSession builds, so the spec reproduces these numbers
+  * exactly. Regenerate after any INTENDED plan change:
   * `sbt "runMain graft.FusionBudgets"`, review the diff (a row's
   * unfused count DROPPING is a win worth keeping; one RISING needs the
   * FUSION.md triage), commit.
@@ -55,7 +55,7 @@ object FusionBudgets {
   }
 
   /** execute the frame (AQE-final) and audit its plan. */
-  def auditExecuted(df: org.apache.spark.sql.DataFrame): (Int, Int, String) = {
+  def auditExecuted(df: DataFrame): (Int, Int, String) = {
     df.queryExecution.toRdd.count()
     unfusedCounts(df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode))
@@ -65,18 +65,24 @@ object FusionBudgets {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1)
       else "src/test/resources/fusion_budgets.tsv"
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-fusion-budgets")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate())
+    val spark = GraftSession.budget()
     spark.sparkContext.setLogLevel("ERROR")
+    val rows = auditRows(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1))
+    Files.createDirectories(Paths.get(out).getParent)
+    Files.writeString(Paths.get(out), rows)
+    println(s"wrote $out")
+    spark.stop()
+  }
+
+  /** One `name, unfused, total, ops` TSV row per query, run in order with
+    * a cache drain after each; a query that throws gets a FAILED row
+    * instead of ending the sweep. The generator and graft.FusionAudit
+    * both write these rows.
+    */
+  def auditRows(spark: SparkSession, sfDir: String,
+                queries: Seq[(String, (SparkSession, String) => DataFrame)]): String = {
     val sb = new StringBuilder
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try {
         val (unfused, total, ops) = auditExecuted(fn(spark, sfDir))
         sb.append(s"$name\t$unfused\t$total\t$ops\n")
@@ -87,9 +93,6 @@ object FusionBudgets {
           sb.append(s"$name\tFAILED\tFAILED\t${e.getClass.getSimpleName}\n")
       } finally Caching.drain()
     }
-    Files.createDirectories(Paths.get(out).getParent)
-    Files.writeString(Paths.get(out), sb.toString)
-    println(s"wrote $out")
-    spark.stop()
+    sb.toString
   }
 }

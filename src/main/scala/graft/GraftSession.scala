@@ -118,14 +118,38 @@ object GraftSession {
         .getOrCreate())
     else local()
 
+  /** The fixed session the plan-budget gates are counted in: local[4],
+    * 4 shuffle partitions, NO graft extensions. The test suite's shared
+    * session and the generators [[graft.PlanBudgets]] / [[graft.FusionBudgets]]
+    * all build it here — the committed `exchange_budgets.tsv` and
+    * `fusion_budgets.tsv` hold only while spec and generator plan in the
+    * same session. Callers set their own log level.
+    */
+  def budget(): SparkSession =
+    tune(SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-budget")
+      .config("spark.sql.shuffle.partitions", 4)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-wh").toString)
+      .getOrCreate())
+
   /** Local session for tests / tools. On a cluster the user brings their own
     * session; `tune` is all graft needs applied to it.
     */
   def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession =
+    onMaster(s"local[$cores]", cores)
+
+  /** [[local]]'s session under an explicit `master`, e.g.
+    * `local-cluster[2,16,4096]` (separate executor JVMs, real RPC).
+    */
+  def onMaster(master: String, cores: Int): SparkSession =
     tune(
       SparkSession
         .builder()
-        .master(s"local[$cores]")
+        .master(master)
         .appName("graft")
         // SQL names + the FuseCountInSet rule for config/SQL pipelines
         // (see graftglue.GraftExtensions; a pre-existing session keeps its

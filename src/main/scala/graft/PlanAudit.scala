@@ -25,10 +25,7 @@ object PlanAudit {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        // count shuffle exchanges in the plan TREE only ("Exchange (n)"
-        // with the operator id) — a bare "Exchange" regex also matches each
-        // node's detail section below the tree and double-counts
-        val shuffles = "(?<!Broadcast|Reused)Exchange \\(\\d+\\)".r.findAllIn(plan).size
+        val shuffles = PlanBudgets.countExchanges(plan)
         sb.append(s"\n## $name  (shuffle exchanges: $shuffles)\n\n```\n")
         sb.append(plan.take(8000))
         sb.append("\n```\n")

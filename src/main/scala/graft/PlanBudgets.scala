@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes the audited shuffle-exchange count of EVERY SparkEntry query to
   * `src/test/resources/exchange_budgets.tsv` — the committed data behind
   * PlanBudgetSpec's regression gate (r13). plans/PLANS.md records the
@@ -13,14 +11,18 @@ import org.apache.spark.sql.SparkSession
   * bench read (the r12 CodegenFallback incident was caught by a human
   * reading PLANS.md — this closes that gap for exchanges).
   *
-  * The session MIRRORS TestSession (local[4], shuffle partitions 4,
-  * sf0.001, no extensions) so the spec's recount reproduces these numbers
-  * exactly; the counter is PlanAudit's tree-only regex (Broadcast/Reused
-  * exchanges are not shuffles). Regenerate after any INTENDED plan
-  * change: `sbt "runMain graft.PlanBudgets"`, review the diff, commit.
+  * The session is [[GraftSession.budget]], the one TestSession builds, at
+  * sf0.001, so the spec's recount reproduces these numbers exactly; the
+  * counter is [[countExchanges]] (Broadcast/Reused exchanges are not
+  * shuffles). Regenerate after any INTENDED plan change:
+  * `sbt "runMain graft.PlanBudgets"`, review the diff, commit.
   */
 object PlanBudgets {
-  /** The shared counter — one spelling for generator and spec. */
+  /** The shared counter — one spelling for generator, spec and PlanAudit.
+    * It counts shuffle exchanges in the plan TREE only ("Exchange (n)"
+    * with the operator id): a bare "Exchange" regex also matches each
+    * node's detail section below the tree and double-counts.
+    */
   def countExchanges(plan: String): Int =
     "(?<!Broadcast|Reused)Exchange \\(\\d+\\)".r.findAllIn(plan).size
 
@@ -28,15 +30,7 @@ object PlanBudgets {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1)
       else "src/test/resources/exchange_budgets.tsv"
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-budgets")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate())
+    val spark = GraftSession.budget()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

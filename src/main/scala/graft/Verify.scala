@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,20 +8,11 @@ object Verify {
     // queries (local iteration); the driver's two-arg call runs everything
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER overrides the single-JVM default — used by the
     // multi-executor CI pass (`local-cluster[2,16,4096]` via spark-submit)
     // that catches executor-side serialization and broadcast-lifecycle
     // bugs local[N] cannot (separate executor JVMs, real RPC).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val spark = GraftSession.tune(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new org.apache.spark.sql.graftglue.GraftExtensions)
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sys.env.get("SPARK_GRAFT_MASTER"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

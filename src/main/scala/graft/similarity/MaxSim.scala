@@ -197,8 +197,8 @@ object MaxSim {
 
   /** Vote-based candidate cut for the stored-candidates composition
     * (q_maxsim_ann_candidates — its DuckDB oracle replays this exact
-    * arithmetic, so the recipe must live in ONE place; ScaleBench and
-    * ClusteredSweep share it too). `docHits` is a (query_id, neighbor_id)
+    * arithmetic, so the recipe must live in ONE place; ScaleBench shares
+    * it too). `docHits` is a (query_id, neighbor_id)
     * frame at DOCUMENT granularity — one row per retained token hit,
     * repeats counting as votes; self-pairs drop and the `topN` most-voted
     * docs per query survive (ties → lower doc id). Hit-set-sized at every

@@ -279,7 +279,6 @@ class LayoutSpec extends SparkSpec {
     def recordsRead(path: String): Long = {
       val m = graft.monitor.PipelineMetrics.attach(spark)
       assert(spark.read.parquet(path).filter(col("k") === 12345L).count() == 1L)
-      Thread.sleep(500) // listener events are async
       val r = m.snapshot("records_read")
       m.detach()
       r

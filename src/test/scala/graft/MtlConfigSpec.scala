@@ -1253,10 +1253,6 @@ class MtlConfigSpec extends SparkSpec {
     val m = PipelineMetrics.attach(spark)
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-      // listener bus is async; poll briefly
-      val deadline = System.currentTimeMillis() + 10000
-      while (m.snapshot("tasks") == 0 && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
       val snap = m.snapshot
       assert(snap("tasks") > 0)
       assert(snap("records_read") > 0)

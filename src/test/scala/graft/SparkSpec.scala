@@ -4,20 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session keeps the test
-  * run fast; suites must not mutate session state destructively).
+  * run fast; suites must not mutate session state destructively). It is
+  * the budget session, so PlanBudgetSpec / FusionBudgetSpec recount in the
+  * session the committed budgets were generated in.
   */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = GraftSession.tune(
-      SparkSession.builder()
-        .master("local[4]")
-        .appName("graft-test")
-        .config("spark.sql.shuffle.partitions", 4)
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.warehouse.dir",
-          java.nio.file.Files.createTempDirectory("graft-wh").toString)
-        .getOrCreate())
+    val s = GraftSession.budget()
     s.sparkContext.setLogLevel("WARN")
     s
   }
